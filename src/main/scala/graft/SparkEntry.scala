@@ -44,11 +44,10 @@ object SparkEntry {
           .as("text_fnv_sum"))
       .orderBy(groupCol)
 
-  /** `SPARK_GRAFT_ONLY` parsing shared by [[Verify]] and [[Bench]] (one
-    * definition so the two tools can never probe different gate sets):
-    * comma-separated tokens; a token matches a query when it equals the
-    * name, is an underscore-delimited prefix ("d7" →
-    * d7_segment_dup_stats), or equals the family's leading letters
+  /** `SPARK_GRAFT_ONLY` parsing for [[Verify]]: comma-separated
+    * tokens; a token matches a query when it equals the name, is an
+    * underscore-delimited prefix ("d7" → d7_segment_dup_stats), or
+    * equals the family's leading letters
     * ("t" → t5…/t11…, but NOT tp1…, whose family is "tp"). A blank or
     * empty value means NO filter — an exported-but-empty variable must
     * not silently select zero queries. */

@@ -25,8 +25,8 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // optional filter shared with Bench (SparkEntry.onlyFilter) —
-    // dev-loop tool for re-verifying just the gates being worked on
+    // optional filter (SparkEntry.onlyFilter) — dev-loop tool for
+    // re-verifying just the gates being worked on
     val selected = SparkEntry.onlyFilter(sys.env.get("SPARK_GRAFT_ONLY"))
     val ran = scala.collection.mutable.ArrayBuffer.empty[String]
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]

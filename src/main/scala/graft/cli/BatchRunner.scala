@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.GraftSession
 import graft.sources.{CuratedWriter, Manifest}
-import graft.taxi.{Cleaning, SchemaNormalizer}
+import graft.taxi.SchemaNormalizer
 
 /** The batch driver re-expressed (SURVEY §3.3,
   * `scripts/batch_etl_simple.py`): the reference enumerates S3 keys with
@@ -48,9 +48,8 @@ object BatchRunner {
       loads.foreach(record(_, None))
       throw new IllegalArgumentException(s"no readable cab types under $input")
     }
-    val all = frames.reduce(_.unionByName(_, allowMissingColumns = true))
-    val cleaned = Cleaning.withRatios(
-      Cleaning.withTimeFeatures(Cleaning.clean(all)))
+    val cleaned = EtlJob.cleanAndDerive(
+      frames.reduce(_.unionByName(_, allowMissingColumns = true)))
     CuratedWriter.writeCurated(cleaned, output)
     val counts = spark.read.parquet(output)
       .groupBy("cab_type").count()

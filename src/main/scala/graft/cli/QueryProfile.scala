@@ -6,8 +6,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * optimization rounds use to see where a multi-job gate's seconds go
   * (job count × scheduling floor vs genuine compute). Runs the named
   * query twice (first pass pays JIT/codegen/page-cache warmup) through
-  * the same noop sink as Bench and prints every Spark job of the SECOND
-  * run with its duration and description.
+  * a `noop` sink (every operator executes) and prints every Spark job
+  * of the SECOND run with its duration and description.
   *
   * Usage: `runMain graft.cli.QueryProfile <query> [<query>...]`
   * Env: `SPARK_GRAFT_SF_DIR` (default sf0.1), `SPARK_GRAFT_CPUS` (32).

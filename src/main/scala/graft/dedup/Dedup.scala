@@ -400,9 +400,7 @@ object Dedup {
       graft.operators.Partitioning.spread(documents), numHashes, shingleK,
       reproducible).persist()
     val banded = bandedKeys(sigs, numHashes, bands, reproducible)
-    val buckets = banded.groupBy("band", "band_hash")
-      .agg(min("doc_id").as("rep"), count(lit(1)).as("bsz"))
-    val withSize = banded.join(buckets, Seq("band", "band_hash"))
+    val withSize = banded.join(bucketCensus(banded), Seq("band", "band_hash"))
     val small = withSize.filter(col("bsz") <= maxBucket)
       .select(col("band"), col("band_hash"), col("doc_id"))
     val candSmall = small.as("a")
@@ -417,8 +415,7 @@ object Dedup {
       .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
       .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
-        (size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y),
-          eq => eq)).cast("double") / numHashes).as("est_jaccard"))
+        estJaccard(col("sig_a"), col("sig_b"), numHashes).as("est_jaccard"))
     // Materialize the pair set NOW (it is orders of magnitude smaller
     // than the corpus) so the cached signature frame can be released —
     // a lazily-returned frame would pin it in the block manager for the
@@ -450,6 +447,38 @@ object Dedup {
         posexplode(array(bandKeyCols(numHashes, bands, reproducible): _*)))
       .select(col("doc_id"), col("pos").as("band"), col("col").as("band_hash"))
 
+  /** The LSH bucket census of a band-key frame: one row per
+    * (band, band_hash) with its representative `rep` (min doc_id — the
+    * hub every star pair hangs off) and its size `bsz` (the input of
+    * the `maxBucket` guard). */
+  private[graft] def bucketCensus(banded: DataFrame): DataFrame =
+    banded.groupBy("band", "band_hash")
+      .agg(min("doc_id").as("rep"), count(lit(1)).as("bsz"))
+
+  /** The corpus-side probe rows of a band index under the hot-bucket
+    * guard, as `(band, band_hash, doc_corpus)`: every member of a bucket
+    * of at most `maxBucket` docs, and only the representative of a
+    * larger one — a probe landing in a mega-cluster matches it once,
+    * via its rep, instead of once per member. */
+  private[graft] def probeRows(index: BandIndex, maxBucket: Int): DataFrame =
+    index.bands.join(index.buckets, Seq("band", "band_hash"))
+      .filter(col("bsz") <= maxBucket)
+      .select(col("band"), col("band_hash"), col("doc_id").as("doc_corpus"))
+      .union(index.buckets.filter(col("bsz") > maxBucket)
+        .select(col("band"), col("band_hash"), col("rep").as("doc_corpus")))
+
+  /** MinHash Jaccard estimate: the fraction of the `numHashes` signature
+    * positions on which `a` and `b` agree. */
+  private[graft] def estJaccard(a: Column, b: Column, numHashes: Int): Column =
+    size(filter(zip_with(a, b, (x, y) => x === y), eq => eq))
+      .cast("double") / numHashes
+
+  /** [[estJaccard]] on collected signatures, for code that scores
+    * inside a Scala function (the streaming screens' bucket state). */
+  private[graft] def agreement(a: Seq[Long], b: Seq[Long], numHashes: Int): Double =
+    a.iterator.zip(b.iterator).count { case (x, y) => x == y }
+      .toDouble / numHashes
+
   /** Cross-corpus near-dup screen — the INGEST-time variant of
     * [[minhashNearDups]]: which incoming documents near-duplicate
     * something already in the corpus? Both sides get the same
@@ -464,50 +493,17 @@ object Dedup {
     * (incoming, bucket-rep) pairs only — "matched a mega-cluster, via
     * its representative" — linear instead of |bucket| per probe.
     *
-    * Scale shape: signatures once per side; the band join shuffles
-    * (band, key) pairs; scoring joins touch signature-sized frames. At
-    * a 100 TB corpus the banded-corpus frame is the thing to PERSIST
-    * across ingest batches — see `Ivf.save`'s index-persistence
-    * pattern; here both sides are computed fresh for gate
-    * determinism. */
+    * This is [[screenAgainstIndex]] over a freshly built
+    * [[buildBandIndex]] of `corpus`. At a 100 TB corpus that index is
+    * the thing to PERSIST across ingest batches ([[saveBandIndex]]);
+    * here it is computed fresh for gate determinism. */
   def crossCorpusNearDups(incoming: DataFrame, corpus: DataFrame,
                           numHashes: Int = 64, bands: Int = 16,
                           shingleK: Int = 3, maxBucket: Int = 64,
-                          reproducible: Boolean = false): DataFrame = {
-    require(numHashes % bands == 0,
-      s"bands ($bands) must divide numHashes ($numHashes) evenly")
-    val sigsIn = minhashSignatures(incoming, numHashes, shingleK, reproducible)
-      .persist()
-    val sigsC = minhashSignatures(
-      graft.operators.Partitioning.spread(corpus), numHashes, shingleK,
-      reproducible).persist()
-    val bIn = bandedKeys(sigsIn, numHashes, bands, reproducible)
-    val bC = bandedKeys(sigsC, numHashes, bands, reproducible)
-    val bucketsC = bC.groupBy("band", "band_hash")
-      .agg(min("doc_id").as("rep"), count(lit(1)).as("bsz"))
-    val smallC = bC.join(bucketsC, Seq("band", "band_hash"))
-      .filter(col("bsz") <= maxBucket)
-      .select(col("band"), col("band_hash"), col("doc_id"))
-    val candSmall = bIn.join(smallC
-        .withColumnRenamed("doc_id", "doc_corpus"),
-        Seq("band", "band_hash"))
-      .select(col("doc_id").as("doc_in"), col("doc_corpus"))
-    val candStar = bIn.join(bucketsC.filter(col("bsz") > maxBucket),
-        Seq("band", "band_hash"))
-      .select(col("doc_id").as("doc_in"), col("rep").as("doc_corpus"))
-    val candidates = candSmall.union(candStar).distinct()
-    val scored = candidates
-      .join(sigsIn.select(col("doc_id").as("doc_in"), col("sig").as("sig_i")),
-        "doc_in")
-      .join(sigsC.select(col("doc_id").as("doc_corpus"), col("sig").as("sig_c")),
-        "doc_corpus")
-      .select(col("doc_in"), col("doc_corpus"),
-        (size(filter(zip_with(col("sig_i"), col("sig_c"), (x, y) => x === y),
-          eq => eq)).cast("double") / numHashes).as("est_jaccard"))
-    val out = scored.localCheckpoint(eager = true)
-    sigsIn.unpersist(); sigsC.unpersist()
-    out
-  }
+                          reproducible: Boolean = false): DataFrame =
+    screenAgainstIndex(incoming,
+      buildBandIndex(corpus, numHashes, bands, shingleK, reproducible),
+      maxBucket)
 
   /** The corpus side of the ingest screen, materialized: signatures,
     * band keys, and the bucket census, plus the parameters they were
@@ -521,16 +517,16 @@ object Dedup {
                              numBands: Int, shingleK: Int,
                              reproducible: Boolean)
 
-  /** Build the corpus band index once per snapshot — the same
-    * signature/banding/bucket computation [[crossCorpusNearDups]] runs
-    * inline, factored out so it can be [[saveBandIndex]]d. */
+  /** Build the corpus band index once per snapshot — the corpus side of
+    * every screen ([[crossCorpusNearDups]] builds one per call), and the
+    * thing [[saveBandIndex]] persists. */
   def buildBandIndex(corpus: DataFrame, numHashes: Int = 64,
                      bands: Int = 16, shingleK: Int = 3,
                      reproducible: Boolean = false): BandIndex = {
     require(numHashes % bands == 0,
       s"bands ($bands) must divide numHashes ($numHashes) evenly")
     // LAZY localCheckpoint: every consumer of a fresh index (a save's
-    // three table writes, a screen's four corpus-side checkpoints)
+    // three table writes, a streaming screen's corpus-side freezes)
     // otherwise re-runs the corpus-sized shingle+signature pass per
     // materialization — bands and buckets both derive from `sigs`, so
     // the first action signs ONCE and the rest read the cached
@@ -542,9 +538,8 @@ object Dedup {
       graft.operators.Partitioning.spread(corpus), numHashes, shingleK,
       reproducible).localCheckpoint(eager = false)
     val banded = bandedKeys(sigs, numHashes, bands, reproducible)
-    val buckets = banded.groupBy("band", "band_hash")
-      .agg(min("doc_id").as("rep"), count(lit(1)).as("bsz"))
-    BandIndex(sigs, banded, buckets, numHashes, bands, shingleK, reproducible)
+    BandIndex(sigs, banded, bucketCensus(banded), numHashes, bands, shingleK,
+      reproducible)
   }
 
   /** Fold a new batch of documents INTO an existing band index — the
@@ -577,11 +572,9 @@ object Dedup {
       index.shingleK, index.reproducible).localCheckpoint(eager = false)
     val bandedNew = bandedKeys(sigsNew, index.numHashes, index.numBands,
       index.reproducible)
-    val bucketsNew = bandedNew.groupBy("band", "band_hash")
-      .agg(min("doc_id").as("rep"), count(lit(1)).as("bsz"))
     val mergedBuckets = index.buckets
       .withColumnRenamed("rep", "rep_old").withColumnRenamed("bsz", "bsz_old")
-      .join(bucketsNew
+      .join(bucketCensus(bandedNew)
           .withColumnRenamed("rep", "rep_new").withColumnRenamed("bsz", "bsz_new"),
         Seq("band", "band_hash"), "full_outer")
       .select(col("band"), col("band_hash"),
@@ -719,9 +712,9 @@ object Dedup {
 
   /** Label the jobs of `body` in the Spark UI / listener timelines
     * (thread-local — safe under [[inParallel]]). Restores the PREVIOUS
-    * description rather than null so a caller-set label (Bench /
-    * QueryProfile) survives the nested scope. */
-  private def labeled[A](spark: org.apache.spark.sql.SparkSession,
+    * description rather than null so a caller-set label survives the
+    * nested scope. */
+  private[graft] def labeled[A](spark: org.apache.spark.sql.SparkSession,
                          desc: String)(body: => A): A = {
     val sc = spark.sparkContext
     val prev = sc.getLocalProperty("spark.job.description")
@@ -813,8 +806,7 @@ object Dedup {
         bandedNew.hint("rebalance").write.mode("overwrite")
           .parquet(s"$vdir/bands/batch=$n")),
       () => labeled(spark, s"bandindex: append batch=$n buckets")(
-        bandedNew.groupBy("band", "band_hash")
-          .agg(min("doc_id").as("rep"), count(lit(1)).as("bsz"))
+        bucketCensus(bandedNew)
           .write.mode("overwrite").parquet(s"$vdir/buckets/batch=$n")))
     writePointer(fs, vdir, "_BATCHES", n + 1)
     n + 1
@@ -880,30 +872,22 @@ object Dedup {
   }
 
   /** Screen an incoming batch against a (possibly reloaded) corpus band
-    * index — the incremental form of [[crossCorpusNearDups]]: incoming
-    * docs are signed and banded with the INDEX's parameters, candidates
-    * come from the band equi-join against the stored band table (with
-    * the stored bucket census applying the same oversize star guard),
-    * and signature agreement scores against the stored signatures.
-    * Output schema and semantics are exactly [[crossCorpusNearDups]]'s
-    * — one oracle pins both. */
+    * index — the one batch implementation of the ingest screen
+    * ([[crossCorpusNearDups]] is this over a fresh index): incoming docs
+    * are signed and banded with the INDEX's parameters, candidates come
+    * from the band equi-join against the index's [[probeRows]] (the
+    * stored bucket census applying the oversize star guard), and
+    * signature agreement scores against the stored signatures. Output
+    * `(doc_in, doc_corpus, est_jaccard)`. */
   def screenAgainstIndex(incoming: DataFrame, index: BandIndex,
                          maxBucket: Int = 64): DataFrame = {
     val sigsIn = minhashSignatures(incoming, index.numHashes, index.shingleK,
       index.reproducible).persist()
-    val bIn = bandedKeys(sigsIn, index.numHashes, index.numBands,
-      index.reproducible)
-    val smallC = index.bands.join(index.buckets, Seq("band", "band_hash"))
-      .filter(col("bsz") <= maxBucket)
-      .select(col("band"), col("band_hash"), col("doc_id"))
-    val candSmall = bIn.join(smallC
-        .withColumnRenamed("doc_id", "doc_corpus"),
-        Seq("band", "band_hash"))
+    val candidates = bandedKeys(sigsIn, index.numHashes, index.numBands,
+        index.reproducible)
+      .join(probeRows(index, maxBucket), Seq("band", "band_hash"))
       .select(col("doc_id").as("doc_in"), col("doc_corpus"))
-    val candStar = bIn.join(index.buckets.filter(col("bsz") > maxBucket),
-        Seq("band", "band_hash"))
-      .select(col("doc_id").as("doc_in"), col("rep").as("doc_corpus"))
-    val candidates = candSmall.union(candStar).distinct()
+      .distinct()
     val scored = candidates
       .join(sigsIn.select(col("doc_id").as("doc_in"), col("sig").as("sig_i")),
         "doc_in")
@@ -911,8 +895,8 @@ object Dedup {
         .select(col("doc_id").as("doc_corpus"), col("sig").as("sig_c")),
         "doc_corpus")
       .select(col("doc_in"), col("doc_corpus"),
-        (size(filter(zip_with(col("sig_i"), col("sig_c"), (x, y) => x === y),
-          eq => eq)).cast("double") / index.numHashes).as("est_jaccard"))
+        estJaccard(col("sig_i"), col("sig_c"), index.numHashes)
+          .as("est_jaccard"))
     lastScreenPlan = scored.queryExecution.executedPlan.toString
     val out = scored.localCheckpoint(eager = true)
     sigsIn.unpersist()

@@ -32,61 +32,68 @@ object CorpusStreams {
     * twin's answer regardless of arrival order (the gate pins both to
     * one oracle).
     *
-    * At deployment scale the static side is the persisted band index of
-    * the accumulated corpus (signatures + band keys are 8·k bytes/doc —
-    * the thing to save across ingest batches); here it is computed
-    * fresh and frozen with an eager localCheckpoint so every
-    * micro-batch probes the identical index. */
+    * The static side is [[Dedup.buildBandIndex]] of the corpus (at
+    * deployment scale, the persisted band index of the accumulated
+    * corpus), frozen so every micro-batch probes the identical index. */
   def nearDupScreenThroughStream(spark: SparkSession, incoming: DataFrame,
                                  corpus: DataFrame, numHashes: Int = 64,
                                  bands: Int = 16, shingleK: Int = 3,
                                  maxBucket: Int = 64,
                                  reproducible: Boolean = false,
                                  tau: Double = 0.5,
-                                 inputFiles: Int = 3): DataFrame = {
-    val sigsC = Dedup.minhashSignatures(corpus, numHashes, shingleK,
-      reproducible).localCheckpoint(eager = true)
-    val bC = Dedup.bandedKeys(sigsC, numHashes, bands, reproducible)
-    val bucketsC = bC.groupBy("band", "band_hash")
-      .agg(min("doc_id").as("rep"), count(lit(1)).as("bsz"))
-      .localCheckpoint(eager = true)
-    val smallC = bC.join(bucketsC, Seq("band", "band_hash"))
-      .filter(col("bsz") <= maxBucket)
-      .select(col("band"), col("band_hash"), col("doc_id").as("doc_corpus"))
-      .localCheckpoint(eager = true)
-    val starC = bucketsC.filter(col("bsz") > maxBucket)
-      .select(col("band"), col("band_hash"), col("rep").as("doc_corpus"))
-      .localCheckpoint(eager = true)
-    val sigC = sigsC.select(col("doc_id").as("doc_corpus"),
-      col("sig").as("sig_c"))
+                                 inputFiles: Int = 3): DataFrame =
+    screenStream(spark, incoming,
+      Dedup.buildBandIndex(corpus, numHashes, bands, shingleK, reproducible),
+      maxBucket, tau, inputFiles) { (_, vsCorpus) => vsCorpus }
 
-    val raw = EventStreams.throughStream(spark,
-      incoming.select("doc_id", "text"), OutputMode.Append(), inputFiles) {
-      stream =>
-        val sigS = stream.select(col("doc_id").as("doc_in"),
-          graft.functions.HashExpressions.minhashSignature(
-            graft.functions.HashExpressions.shingleHashes(col("text"),
-              shingleK, fnv = reproducible), numHashes).as("sig"))
-        val bS = sigS.select(col("doc_in"), col("sig").as("sig_i"),
-            posexplode(array(
-              Dedup.bandKeyCols(numHashes, bands, reproducible): _*)))
-          .select(col("doc_in"), col("sig_i"),
-            col("pos").as("band"), col("col").as("band_hash"))
-        val cands = bS.join(smallC, Seq("band", "band_hash"))
-          .select(col("doc_in"), col("sig_i"), col("doc_corpus"))
-          .union(bS.join(starC, Seq("band", "band_hash"))
-            .select(col("doc_in"), col("sig_i"), col("doc_corpus")))
-        cands.join(sigC, "doc_corpus")
-          .select(col("doc_in"), col("doc_corpus"),
-            (size(filter(zip_with(col("sig_i"), col("sig_c"),
-              (x, y) => x === y), eq => eq)).cast("double") / numHashes)
-              .as("est_jaccard"))
-          .filter(col("est_jaccard") >= tau)
-    }
-    // per-band duplicate emissions collapse here (distinct on a stream
-    // would need a state store; the stateless emit + batch epilogue is
-    // exactly equivalent and arrival-order-proof)
-    raw.distinct()
+  /** The part every streaming screen shares around its own stateful
+    * half. It freezes the corpus side of `index` — the guarded
+    * [[Dedup.probeRows]] and the signatures — with eager localCheckpoints,
+    * so every micro-batch probes an identical, lineage-free index.
+    * Each micro-batch is then minhash-signed and LSH-banded ROW-LOCALLY
+    * under the index's parameters (the codegen'd expressions are
+    * stateless, so they run unchanged on a stream) into
+    * `(band, band_hash, doc_id, sig, carry…)`, and stream-static joined
+    * against the frozen corpus side into the stateless incoming×corpus
+    * matches `(doc_in, doc_corpus, est_jaccard)` at `est_jaccard >= tau`.
+    * `emit` gets both and returns the rows to emit in Append mode; a
+    * pair found in several bands emits once per band, so the result is
+    * deduplicated in the batch epilogue (distinct on a stream would
+    * need a state store; the stateless emit + batch epilogue is exactly
+    * equivalent and arrival-order-proof). */
+  private def screenStream(spark: SparkSession, incoming: DataFrame,
+                           index: Dedup.BandIndex, maxBucket: Int, tau: Double,
+                           inputFiles: Int, carry: Seq[String] = Nil,
+                           statePartitions: Option[Int] = None,
+                           orderCol: Option[String] = None)
+                          (emit: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    // labeled so the freeze phase is attributable in job timelines
+    // (guide §1.5)
+    def frozen(desc: String)(df: DataFrame): DataFrame =
+      Dedup.labeled(spark, s"screen: freeze $desc")(df.localCheckpoint(eager = true))
+    val probe = frozen("probe rows")(Dedup.probeRows(index, maxBucket))
+    val sigCorpus = frozen("signatures")(
+      index.signatures.select(col("doc_id").as("doc_corpus"),
+        col("sig").as("sig_c")))
+    val kept = (Seq("doc_id", "sig") ++ carry).map(col)
+    EventStreams.throughStream(spark,
+      incoming.select((Seq("doc_id", "text") ++ carry).map(col): _*),
+      OutputMode.Append(), inputFiles, statePartitions, orderCol) { stream =>
+      val bS = stream
+        .select(col("*"), graft.functions.HashExpressions.minhashSignature(
+          graft.functions.HashExpressions.shingleHashes(col("text"),
+            index.shingleK, fnv = index.reproducible), index.numHashes).as("sig"))
+        .select(kept :+ posexplode(array(Dedup.bandKeyCols(index.numHashes,
+          index.numBands, index.reproducible): _*)): _*)
+        .select(Seq(col("pos").as("band"), col("col").as("band_hash")) ++ kept: _*)
+      val vsCorpus = bS.join(probe, Seq("band", "band_hash"))
+        .join(sigCorpus, "doc_corpus")
+        .select(col("doc_id").as("doc_in"), col("doc_corpus"),
+          Dedup.estJaccard(col("sig"), col("sig_c"), index.numHashes)
+            .as("est_jaccard"))
+        .filter(col("est_jaccard") >= tau)
+      emit(bS, vsCorpus)
+    }.distinct()
   }
 
   /** One (doc, band) row entering a bucket's state. */
@@ -152,60 +159,9 @@ object CorpusStreams {
                                     maxBucket: Int = 64, tau: Double = 0.5,
                                     inputFiles: Int = 3,
                                     maxStateDocs: Int = 4096): DataFrame = {
-    val numHashes = index.numHashes
-    val bands = index.numBands
-    val shingleK = index.shingleK
-    val reproducible = index.reproducible
-    // checkpoint the corpus-side frames so every micro-batch probes an
-    // identical, lineage-free index (a freshly built index otherwise
-    // re-evaluates per batch); labeled so the freeze phase is
-    // attributable in job timelines (guide §1.5)
-    val sc = spark.sparkContext
-    def frozen(desc: String)(df: DataFrame): DataFrame = {
-      val prev = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(s"screen: freeze $desc")
-      try df.localCheckpoint(eager = true)
-      finally sc.setJobDescription(prev)
-    }
-    val bucketsC = frozen("buckets")(index.buckets)
-    val smallC = frozen("small-buckets")(
-      index.bands.join(bucketsC, Seq("band", "band_hash"))
-        .filter(col("bsz") <= maxBucket)
-        .select(col("band"), col("band_hash"), col("doc_id").as("doc_corpus")))
-    val starC = frozen("star-buckets")(
-      bucketsC.filter(col("bsz") > maxBucket)
-        .select(col("band"), col("band_hash"), col("rep").as("doc_corpus")))
-    val sigCorpus = frozen("signatures")(
-      index.signatures.select(col("doc_id").as("doc_corpus"),
-        col("sig").as("sig_c")))
-
     import spark.implicits._
-    def agreement(a: Seq[Long], b: Seq[Long]): Double =
-      a.iterator.zip(b.iterator).count { case (x, y) => x == y }
-        .toDouble / numHashes
-
-    val raw = EventStreams.throughStream(spark,
-      incoming.select("doc_id", "text"), OutputMode.Append(), inputFiles,
-      statePartitions = Some(8)) { stream =>
-      val sigS = stream.select(col("doc_id"),
-        graft.functions.HashExpressions.minhashSignature(
-          graft.functions.HashExpressions.shingleHashes(col("text"),
-            shingleK, fnv = reproducible), numHashes).as("sig"))
-      val bS = sigS.select(col("doc_id"), col("sig"),
-          posexplode(array(
-            Dedup.bandKeyCols(numHashes, bands, reproducible): _*)))
-        .select(col("pos").cast("int").as("band"), col("col").as("band_hash"),
-          col("doc_id"), col("sig"))
-      // incoming × static corpus: stateless, guarded on the corpus side
-      val vsCorpus = bS
-        .join(smallC.unionByName(starC), Seq("band", "band_hash"))
-        .join(sigCorpus, "doc_corpus")
-        .select(
-          least(col("doc_id"), col("doc_corpus")).as("doc_a"),
-          greatest(col("doc_id"), col("doc_corpus")).as("doc_b"),
-          (size(filter(zip_with(col("sig"), col("sig_c"), (x, y) => x === y),
-            eq => eq)).cast("double") / numHashes).as("est_jaccard"))
-        .filter(col("est_jaccard") >= tau)
+    screenStream(spark, incoming, index, maxBucket, tau, inputFiles,
+      statePartitions = Some(8)) { (bS, vsCorpus) =>
       // incoming × incoming: the bucket state holds every prior arrival
       val vsPrior = bS.as[BandedDoc]
         .groupByKey(b => (b.band, b.band_hash))
@@ -224,7 +180,7 @@ object CorpusStreams {
                     "compact the horizon into the persisted band index " +
                     "(Dedup.compactBandIndex) or raise the bound")
                 held.foreach { p =>
-                  val s = agreement(p.sig, d.sig)
+                  val s = Dedup.agreement(p.sig, d.sig, index.numHashes)
                   if (s >= tau)
                     out += NearPair(math.min(p.doc_id, d.doc_id),
                       math.max(p.doc_id, d.doc_id), s)
@@ -235,10 +191,16 @@ object CorpusStreams {
             state.update(BucketState(held))
             out.iterator
         }
-      vsCorpus.unionByName(vsPrior.toDF())
+      canonical(vsCorpus).unionByName(vsPrior.toDF())
     }
-    raw.distinct()
   }
+
+  /** Incoming×corpus matches in the [[NearPair]] orientation. */
+  private def canonical(vsCorpus: DataFrame): DataFrame =
+    vsCorpus.select(
+      least(col("doc_in"), col("doc_corpus")).as("doc_a"),
+      greatest(col("doc_in"), col("doc_corpus")).as("doc_b"),
+      col("est_jaccard"))
 
   /** One (doc, band) row entering a TIME-BOUNDED bucket's state. */
   final case class TimedBandedDoc(band: Int, band_hash: Seq[Long],
@@ -313,61 +275,12 @@ object CorpusStreams {
                                                inputFiles: Int = 3,
                                                maxStateDocs: Int = 4096): DataFrame = {
     require(horizonSeconds > 0, s"horizonSeconds must be > 0, got $horizonSeconds")
-    val numHashes = index.numHashes
-    val bands = index.numBands
-    val shingleK = index.shingleK
-    val reproducible = index.reproducible
-    // checkpoint the corpus-side frames so every micro-batch probes an
-    // identical, lineage-free index (a freshly built index otherwise
-    // re-evaluates per batch); labeled so the freeze phase is
-    // attributable in job timelines (guide §1.5)
-    val sc = spark.sparkContext
-    def frozen(desc: String)(df: DataFrame): DataFrame = {
-      val prev = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(s"screen: freeze $desc")
-      try df.localCheckpoint(eager = true)
-      finally sc.setJobDescription(prev)
-    }
-    val bucketsC = frozen("buckets")(index.buckets)
-    val smallC = frozen("small-buckets")(
-      index.bands.join(bucketsC, Seq("band", "band_hash"))
-        .filter(col("bsz") <= maxBucket)
-        .select(col("band"), col("band_hash"), col("doc_id").as("doc_corpus")))
-    val starC = frozen("star-buckets")(
-      bucketsC.filter(col("bsz") > maxBucket)
-        .select(col("band"), col("band_hash"), col("rep").as("doc_corpus")))
-    val sigCorpus = frozen("signatures")(
-      index.signatures.select(col("doc_id").as("doc_corpus"),
-        col("sig").as("sig_c")))
-
     import spark.implicits._
     val hMs = horizonSeconds * 1000L
-    def agreement(a: Seq[Long], b: Seq[Long]): Double =
-      a.iterator.zip(b.iterator).count { case (x, y) => x == y }
-        .toDouble / numHashes
-
-    val raw = EventStreams.throughStream(spark,
-      incoming.select("doc_id", "text", "ts"), OutputMode.Append(), inputFiles,
-      statePartitions = Some(8), orderCol = Some("ts")) { stream =>
-      val sigS = stream.select(col("doc_id"), col("ts"),
-        graft.functions.HashExpressions.minhashSignature(
-          graft.functions.HashExpressions.shingleHashes(col("text"),
-            shingleK, fnv = reproducible), numHashes).as("sig"))
-      val bS = sigS.select(col("doc_id"), col("ts"), col("sig"),
-          posexplode(array(
-            Dedup.bandKeyCols(numHashes, bands, reproducible): _*)))
-        .select(col("pos").cast("int").as("band"), col("col").as("band_hash"),
-          col("doc_id"), col("sig"), col("ts"))
-      // incoming × static corpus: stateless, horizon-free (snapshot side)
-      val vsCorpus = bS
-        .join(smallC.unionByName(starC), Seq("band", "band_hash"))
-        .join(sigCorpus, "doc_corpus")
-        .select(
-          least(col("doc_id"), col("doc_corpus")).as("doc_a"),
-          greatest(col("doc_id"), col("doc_corpus")).as("doc_b"),
-          (size(filter(zip_with(col("sig"), col("sig_c"), (x, y) => x === y),
-            eq => eq)).cast("double") / numHashes).as("est_jaccard"))
-        .filter(col("est_jaccard") >= tau)
+    // the static-corpus side is horizon-free (a snapshot, not a stream)
+    screenStream(spark, incoming, index, maxBucket, tau, inputFiles,
+      carry = Seq("ts"), statePartitions = Some(8), orderCol = Some("ts")) {
+      (bS, vsCorpus) =>
       // incoming × incoming: horizon-bounded bucket state
       val vsPrior = bS
         .withWatermark("ts", watermarkDelay)
@@ -400,7 +313,7 @@ object CorpusStreams {
                   val t = d.ts.getTime
                   held.foreach { p =>
                     if (math.abs(t - p.ts_ms) <= hMs) {
-                      val s = agreement(p.sig, d.sig)
+                      val s = Dedup.agreement(p.sig, d.sig, index.numHashes)
                       if (s >= tau)
                         out += NearPair(math.min(p.doc_id, d.doc_id),
                           math.max(p.doc_id, d.doc_id), s)
@@ -417,9 +330,8 @@ object CorpusStreams {
               out.iterator
             }
         }
-      vsCorpus.unionByName(vsPrior.toDF())
+      canonical(vsCorpus).unionByName(vsPrior.toDF())
     }
-    raw.distinct()
   }
 
   /** Streaming decontamination screen — the ingest twin of

@@ -42,8 +42,8 @@ object TaxiFixture {
     }
     val csv = ("LocationID,Borough,Zone,service_zone" +: rows).mkString("", "\n", "\n")
     // write-to-temp + atomic move: a plain truncate-then-write would race
-    // a concurrent reader (e.g. Bench's second iteration scanning while
-    // Verify rewrites) into seeing a half-written zone table
+    // a concurrent reader (another session scanning while Verify
+    // rewrites) into seeing a half-written zone table
     val tmp = Files.createTempFile(dir, "graft_taxi_zone_lookup", ".tmp")
     Files.write(tmp, csv.getBytes("UTF-8"))
     Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE,

@@ -45,13 +45,23 @@ class CrossCorpusSpec extends SparkTestBase {
     val corpus = clones.toDF("doc_id", "text")
     val incoming = Seq((0L, "identical text repeated across the whole " +
       "corpus with enough tokens for shingles")).toDF("doc_id", "text")
-    val out = Dedup.crossCorpusNearDups(incoming, corpus, reproducible = true)
-      .collect()
-    // every band bucket holds 80 corpus clones > 64: only the hub pair
-    assert(out.length == 1)
-    assert(out.head.getLong(0) == 0L)
-    assert(out.head.getLong(1) == 1L) // min corpus doc_id
-    assert(out.head.getDouble(2) == 1.0)
+    // the batch screen and both streaming screens share the probe rows
+    val screens = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "crossCorpusNearDups" -> (() =>
+        Dedup.crossCorpusNearDups(incoming, corpus, reproducible = true)),
+      "nearDupScreenThroughStream" -> (() => graft.streaming.CorpusStreams
+        .nearDupScreenThroughStream(spark, incoming, corpus,
+          reproducible = true)),
+      "growingNearDupScreen" -> (() => graft.streaming.CorpusStreams
+        .growingNearDupScreen(spark, incoming, corpus, reproducible = true)))
+    screens.foreach { case (name, screen) =>
+      val out = screen().collect()
+      // every band bucket holds 80 corpus clones > 64: only the hub pair
+      assert(out.length == 1, name)
+      assert(out.head.getLong(0) == 0L, name)
+      assert(out.head.getLong(1) == 1L, name) // min corpus doc_id
+      assert(out.head.getDouble(2) == 1.0, name)
+    }
   }
 
   test("streaming decontamination equals the batch report at 1 and 4 micro-batches") {
